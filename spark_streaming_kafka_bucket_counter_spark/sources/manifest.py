@@ -73,6 +73,7 @@ from __future__ import annotations
 import contextlib
 import json
 import os
+import re
 import threading
 import time
 import uuid
@@ -80,6 +81,7 @@ from pathlib import Path
 from typing import Iterator, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructField, StructType
 
 MANIFEST_DIR = "_manifest"
 #: manifest generations to retain beyond the grace window (debugging
@@ -322,14 +324,38 @@ def scan_parquet_files(root: str | Path) -> set[str]:
 _STAT_STR_CAP = 60
 
 
+#: footer key under which Spark's parquet writer stores the row schema
+#: (StructType JSON, partition columns excluded) of every file it writes
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _compact_schema(raw: bytes | None) -> str | None:
+    """Spark's row-schema JSON as ``[[name, type(, metadata)], ...]``:
+    nullability is dropped (a file read makes every field nullable) and
+    so is empty metadata, which keeps the per-file manifest entry at
+    about a quarter of the footer text. None when the footer holds no
+    Spark schema."""
+    try:
+        fields = json.loads(raw)["fields"]
+        return json.dumps(
+            [[f["name"], f["type"]] + ([f["metadata"]] if f.get("metadata") else [])
+             for f in fields],
+            separators=(",", ":"),
+        )
+    except (ValueError, KeyError, TypeError):
+        return None
+
+
 def _file_stats(path: Path) -> dict | None:
     """Zone-map entry for one parquet file, from its FOOTER only (no
     data read): {"rows": n, "cols": {name: {"mn","mx","nulls"} |
-    {"allnull": true}}}. Top-level primitive columns only (nested chunk
-    paths contain '.'); a column whose min/max is unusable in any row
-    group (missing, NaN, unorderable, oversized string) is omitted —
-    pruning treats missing as "may match". Returns None if the footer
-    can't be read (the file is then simply never pruned)."""
+    {"allnull": true}}, "schema": <Spark row schema, compacted>}. Top-level
+    primitive columns only (nested chunk paths contain '.'); a column
+    whose min/max is unusable in any row group (missing, NaN,
+    unorderable, oversized string) is omitted — pruning treats missing
+    as "may match". ``schema`` is present only for files Spark wrote
+    (see :func:`recorded_schema`). Returns None if the footer can't be
+    read (the file is then simply never pruned)."""
     try:
         import pyarrow.parquet as pq
 
@@ -395,7 +421,11 @@ def _file_stats(path: Path) -> dict | None:
                 cols[name] = {"allnull": True}
             continue
         cols[name] = {"mn": ent["mn"], "mx": ent["mx"], "nulls": ent["nulls"]}
-    return {"rows": rows, "cols": cols}
+    out = {"rows": rows, "cols": cols}
+    schema = _compact_schema((md.metadata or {}).get(_SPARK_SCHEMA_KEY))
+    if schema is not None:
+        out["schema"] = schema
+    return out
 
 
 def _harvest_stats(rootp: Path, rels: Sequence[str]) -> dict[str, dict]:
@@ -405,6 +435,17 @@ def _harvest_stats(rootp: Path, rels: Sequence[str]) -> dict[str, dict]:
         if st is not None:
             out[rel] = st
     return out
+
+
+def _int_literal(v):
+    """``v`` as an int when it is a string Spark casts to that same
+    BIGINT (an optional sign and ASCII digits, inside the int64 range);
+    anything else is returned unchanged."""
+    if isinstance(v, str) and re.fullmatch(r"[+-]?[0-9]+", v):
+        n = int(v)
+        if -(2**63) <= n < 2**63:
+            return n
+    return v
 
 
 def _satisfiable(fstat: dict | None, col: str, op: str, value) -> bool:
@@ -423,6 +464,15 @@ def _satisfiable(fstat: dict | None, col: str, op: str, value) -> bool:
     if cs.get("allnull"):
         return False  # known comparisons never match NULL
     mn, mx = cs["mn"], cs["mx"]
+    if isinstance(mn, int) and isinstance(mx, int):
+        # the HTTP routes pass bounds as path strings, and Spark's row
+        # filter casts such a literal to the integral column type; any
+        # string that is not exactly an int64 stays a str, so the
+        # cross-type compare below keeps the file
+        if op == "in" and isinstance(value, (list, tuple, set, frozenset)):
+            value = [_int_literal(v) for v in value]
+        else:
+            value = _int_literal(value)
 
     def _nan(v) -> bool:
         return isinstance(v, float) and v != v
@@ -486,6 +536,37 @@ def files_matching(m: dict, sub: str = "",
         if all(_satisfiable(fstat, c, op, v) for (c, op, v) in predicate):
             out.append(f)
     return out
+
+
+def recorded_schema(m: dict, rels: Sequence[str]) -> StructType | None:
+    """The union of the Spark row schemas the snapshot recorded for
+    ``rels``, merged in the given order the way parquet ``mergeSchema``
+    merges footers (new fields append; every field nullable, as any
+    file read makes them) — so a read can declare it and skip Spark's
+    footer-merge job. None when any file has no recorded schema (a
+    snapshot written before schemas were recorded, a non-Spark writer)
+    or two files disagree on a field's type or spelling: the caller
+    then keeps the ``mergeSchema`` read, which resolves (or rejects)
+    such stores exactly as before."""
+    stats = m.get("stats", {})
+    texts = [stats.get(f, {}).get("schema") for f in rels]
+    if None in texts:
+        return None
+    fields: dict[str, StructField] = {}
+    for text in dict.fromkeys(texts):  # batches mostly share one schema
+        try:
+            schema = StructType.fromJson({"type": "struct", "fields": [
+                {"name": f[0], "type": f[1], "nullable": True,
+                 "metadata": f[2] if len(f) > 2 else {}}
+                for f in json.loads(text)
+            ]})
+        except (ValueError, TypeError, KeyError, IndexError):
+            return None  # unparseable here: leave it to Spark's merge
+        for fld in schema.fields:
+            seen = fields.setdefault(fld.name.lower(), fld)
+            if seen.name != fld.name or seen.dataType != fld.dataType:
+                return None
+    return StructType(list(fields.values()))
 
 
 def _publish(root: str | Path, files: Sequence[str], retired: dict[str, float],

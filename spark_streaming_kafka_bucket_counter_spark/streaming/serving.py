@@ -155,6 +155,20 @@ class ServingStore:
     (:meth:`snapshot` + :meth:`view_at`) and row-level
     right-to-be-forgotten (:meth:`forget`) come with the substrate.
 
+    Reads plan from the snapshot alone. Each commit records the row
+    schema Spark wrote into every new file's footer, so a read declares
+    the union of those schemas instead of running Spark's footer-merge
+    (``mergeSchema``) job; batch-id conjuncts (:meth:`batch`,
+    :meth:`recent`, :meth:`view_asof`) and zone-map conjuncts
+    (:meth:`view_where`) cut the file list before Spark sees it, so
+    ``/rv``, ``/dv``, ``/sr`` and ``/c/<json>/EOE`` plan over a handful
+    of files. A full-store read (:meth:`view`, ``/c/<sql>``) still
+    passes every live file, which Spark lists in a parallel job once
+    there are more than 32. A snapshot with a file lacking a recorded
+    schema (written before schemas were recorded) or with files that
+    disagree on a column's type keeps the ``mergeSchema`` read, without
+    batch-id pruning, as before.
+
     Pre-round-9 stores (symlink partitions pointing at hidden
     ``_data_*`` version dirs, or the older two-rename ``_compact_`` /
     ``_old_`` debris) self-heal and migrate on first metadata read:
@@ -337,13 +351,16 @@ class ServingStore:
                 bak.rename(part)  # compacted copy lost: restore original
 
     @staticmethod
-    def _ids_of(files) -> list[int]:
-        ids = set()
-        for f in files:
-            head = f.split("/", 1)[0]
-            if head.startswith(f"{RST_COL}="):
-                ids.add(int(head.split("=", 1)[1]))
-        return sorted(ids)
+    def _id_of(f: str) -> int | None:
+        """The batch id of a file's ``RST_ID=<b>/`` path prefix."""
+        head = f.split("/", 1)[0]
+        if head.startswith(f"{RST_COL}="):
+            return int(head.split("=", 1)[1])
+        return None
+
+    @classmethod
+    def _ids_of(cls, files) -> list[int]:
+        return sorted({cls._id_of(f) for f in files} - {None})
 
     def _batch_ids(self, snapshot: dict | None = None) -> list[int]:
         m = snapshot if snapshot is not None else self._snapshot()
@@ -374,29 +391,55 @@ class ServingStore:
         travel, complementing the batch-id-based :meth:`view_asof`."""
         return self._view_from(snapshot)
 
+    @classmethod
+    def _batch_zone(cls, f: str) -> dict | None:
+        """A file's batch id as a one-value zone map, so batch-id
+        conjuncts prune by the same rules as data columns."""
+        b = cls._id_of(f)
+        return None if b is None else {"cols": {RST_COL: {"mn": b, "mx": b, "nulls": 0}}}
+
     def _view_from(self, m: dict | None, predicate: list | tuple = ()) -> DataFrame:
         if m is not None:
+            from ..sources.manifest import (
+                _satisfiable,
+                files_matching,
+                recorded_schema,
+            )
+
             if not m["files"]:
                 raise ValueError(f"serving store at {self.path} is empty")
+            # declared schema: the union of the row schemas recorded at
+            # commit for EVERY live file, so a pruned read still shows a
+            # column only other batches carry (NULL here) and Spark runs
+            # no footer-merge job; RST_ID stays path-inferred
+            schema = recorded_schema(m, m["files"])
             rels = m["files"]
             if predicate:
-                from ..sources.manifest import files_matching
-
-                # zone-map file pruning: conjuncts the caller will ALSO
-                # apply as a row filter, so keeping one file as a schema
-                # donor when everything is pruned stays correct
-                rels = files_matching(m, "", predicate) or m["files"][:1]
-            paths = [str(self.path / f) for f in rels]
-            # basePath keeps the RST_ID partition column in the schema;
-            # mergeSchema lets later batches widen the table (schema
-            # evolution) with NULL backfill for older partitions. The
-            # explicit per-file list IS the snapshot pin: files a
+                # file pruning: data-column conjuncts against the zone
+                # maps, batch-id conjuncts against each file's RST_ID=<b>/
+                # prefix. The caller ALSO applies every conjunct as a row
+                # filter, so one donor file when everything is pruned
+                # stays correct.
+                rels = files_matching(m, "", [p for p in predicate if p[0] != RST_COL])
+                if schema is not None:
+                    on_batch = [(op, v) for c, op, v in predicate if c == RST_COL]
+                    rels = [f for f in rels if all(
+                        _satisfiable(self._batch_zone(f), RST_COL, op, v)
+                        for op, v in on_batch
+                    )]
+                rels = rels or m["files"][:1]
+            # The explicit per-file list IS the snapshot pin: files a
             # maintenance pass retires stay resolvable till GC.
-            return (
-                self.spark.read.option("basePath", str(self.path))
-                .option("mergeSchema", "true")
-                .parquet(*paths)
-            )
+            reader = self.spark.read.option("basePath", str(self.path))
+            paths = [str(self.path / f) for f in rels]
+            if schema is None:
+                # some file has no recorded schema (a snapshot written
+                # before schemas were recorded) or two files disagree on
+                # a type: Spark's footer merge decides, as it always has.
+                # Batch-id pruning stays off here — it would drop a
+                # later-added column from an old batch's read.
+                return reader.option("mergeSchema", "true").parquet(*paths)
+            return reader.schema(schema).parquet(*paths)
         ids = self._batch_ids()
         if not ids:
             raise ValueError(f"serving store at {self.path} is empty")
@@ -412,24 +455,26 @@ class ServingStore:
         consistent file set no concurrent maintenance can break."""
         return self._view_from(self._snapshot())
 
-    def view_where(self, params: dict) -> DataFrame:
-        """:meth:`view` with zone-map FILE pruning for a per-field
-        comparator spec (the c_general_select / HTTP-route shape): data
-        columns that arrive in time order (bucket_start, epochs) are
-        clustered across batch files, so a selective point/range query
-        plans over a fraction of the store's files without opening the
-        rest. The caller must still apply the row-level filter — the
-        pruning only drops files that provably contain no match (and
-        RST_ID itself stays partition-pruned as before)."""
+    def view_where(self, params: dict, snapshot: dict | None = None) -> DataFrame:
+        """:meth:`view` with FILE pruning for a per-field comparator
+        spec (the c_general_select / HTTP-route shape): data columns
+        that arrive in time order (bucket_start, epochs) are clustered
+        across batch files, so a selective point/range query plans over
+        a fraction of the store's files without opening the rest;
+        ``RST_ID`` conjuncts select batch partitions by path. The caller
+        must still apply the row-level filter — the pruning only drops
+        files that provably contain no match. ``snapshot`` pins the read
+        to one :meth:`snapshot` (default: the latest)."""
         from ..functions.predicates import zone_conjuncts
 
-        snap = self._snapshot()
+        snap = self._snapshot() if snapshot is None else snapshot
         pruned = self._view_from(snap, predicate=zone_conjuncts(params))
-        # schema evolution guard: if pruning dropped every file carrying
-        # a later-added column the spec references, mergeSchema over the
-        # survivors can't surface it and the caller's row filter would
-        # raise UNRESOLVED_COLUMN where the full view returns [] — fall
-        # back to the unpruned view (correct, merely unpruned)
+        # schema evolution guard for the mergeSchema path: if pruning
+        # dropped every file carrying a later-added column the spec
+        # references, the survivors can't surface it and the caller's
+        # row filter would raise UNRESOLVED_COLUMN where the full view
+        # returns [] — fall back to the unpruned view (correct, merely
+        # unpruned). A declared schema always holds every column.
         if any(f not in pruned.columns for f in params):
             return self._view_from(snap)
         return pruned
@@ -474,22 +519,31 @@ class ServingStore:
     def recent(self, n: int) -> DataFrame:
         """H6: rows of the n most recent batches (http_endpoint.py:170-176).
 
-        Partition pruning turns this into reading exactly n directories.
+        The cutoff comes from the snapshot the read plans over, which
+        lists exactly those n batch directories.
         """
-        return self.view().filter(F.col(RST_COL) > F.lit(self.rst() - n))
+        snap = self._snapshot()
+        ids = self._batch_ids(snap)
+        cutoff = (ids[-1] if ids else -1) - n
+        return self.view_where({RST_COL: ("erange", (cutoff, None))}, snap).filter(
+            F.col(RST_COL) > F.lit(cutoff)
+        )
 
     def batch(self, batch_id: int) -> DataFrame:
         """H7: a single batch by id (http_endpoint.py:178-184)."""
-        return self.view().filter(F.col(RST_COL) == F.lit(batch_id))
+        return self.view_where({RST_COL: ("eq", batch_id)}).filter(
+            F.col(RST_COL) == F.lit(batch_id)
+        )
 
     def view_asof(self, batch_id: int) -> DataFrame:
         """Time travel: the table as it stood when ``batch_id`` was the
-        newest batch — every partition with ``RST_ID <= batch_id``.
-        Partition pruning makes this a metadata operation (reads only
-        the qualifying directories); combined with the idempotent
-        per-partition appends, any historical state inside the retention
-        window is reproducible exactly."""
-        return self.view().filter(F.col(RST_COL) <= F.lit(int(batch_id)))
+        newest batch — every partition with ``RST_ID <= batch_id``. The
+        read plans over only the qualifying directories; combined with
+        the idempotent per-partition appends, any historical state
+        inside the retention window is reproducible exactly."""
+        return self.view_where({RST_COL: ("range", (None, int(batch_id)))}).filter(
+            F.col(RST_COL) <= F.lit(int(batch_id))
+        )
 
     # -- retention (R1-R4) ----------------------------------------------
     def clean(self, clean_interval: int | None = None) -> int:

@@ -204,6 +204,48 @@ def test_http_routes_prune_and_match(spark, tmp_path):
     assert [r["bucket_start"] for r in rows] == [25]
 
 
+def test_sr_route_string_bounds_prune(spark, tmp_path):
+    # /sr/<p>/<lo>:<hi> hands its bounds over as strings; against int
+    # zone maps they must still prune, and the rows must match the
+    # unpruned view's
+    from spark_streaming_kafka_bucket_counter_spark.streaming import http
+    from spark_streaming_kafka_bucket_counter_spark.streaming.serving import (
+        ServingStore,
+    )
+
+    store = ServingStore(spark, str(tmp_path / "srstore"), clean_freq=0)
+    for b in range(4):
+        df = spark.range(b * 100, (b + 1) * 100).coalesce(1).select(
+            F.col("id").alias("bucket_start"), (F.col("id") % 7).alias("count")
+        )
+        store.append(df, b)
+    planned = []
+    view_where = store.view_where
+
+    def spy(*args, **kwargs):
+        planned.append(view_where(*args, **kwargs))
+        return planned[-1]
+
+    store.view_where = spy
+    for path, lo, hi, n_files in (
+        ("/sr/bucket_start/120:180", 120, 180, 1),
+        ("/sr/bucket_start/150:250", 150, 250, 2),
+        ("/sr/bucket_start/None:99", None, 99, 1),
+        ("/sr/bucket_start/390:None", 390, None, 1),
+    ):
+        status, rows = http._route(store, path)
+        assert status == 200
+        assert len(planned[-1].inputFiles()) == n_files, path
+        cond = F.lit(True)
+        if lo is not None:
+            cond &= F.col("bucket_start") >= lo
+        if hi is not None:
+            cond &= F.col("bucket_start") <= hi
+        assert sorted(tuple(r.values()) for r in rows) == sorted(
+            tuple(r) for r in store.view().filter(cond).collect()
+        ), path
+
+
 def test_stats_survive_gc_and_compaction(spark, tmp_path):
     # review catch: maintenance publishes (GC, compaction) must carry
     # zone maps forward and harvest merged replacements — losing them
@@ -223,11 +265,12 @@ def test_stats_survive_gc_and_compaction(spark, tmp_path):
     assert len(files) == 1  # merged
     st = m["stats"][files[0]]["cols"]["id"]
     assert (st["mn"], st["mx"]) == (0, 199)  # harvested for the merged file
+    assert "schema" in m["stats"][files[0]]  # row schema recorded too
     _write_range(spark, root, "data", 200, 300)
     gc_index_tree(root, grace_sec=0.0)
     m2 = latest_manifest(root)
     assert all(
-        "id" in m2["stats"][f]["cols"]
+        "id" in m2["stats"][f]["cols"] and "schema" in m2["stats"][f]
         for f in m2["files"]
         if f.startswith("data/")
     )
@@ -281,6 +324,18 @@ def test_satisfiable_edge_cases():
     assert not _satisfiable(st, "a", "in", [9, 21])
     assert _satisfiable(None, "a", "=", 5)
     assert _satisfiable({}, "a", "=", 5)
+    # HTTP routes pass bounds as strings; against int stats a string
+    # that is exactly an int64 compares as that int (Spark's cast) ...
+    assert not _satisfiable(st, "a", "=", "123")
+    assert not _satisfiable(st, "a", ">", "20") and not _satisfiable(st, "a", "<", "+10")
+    assert not _satisfiable(st, "a", "=", str(-(2**63)))
+    assert not _satisfiable(st, "a", "in", ["9", "21"])
+    assert _satisfiable(st, "a", "=", "15") and _satisfiable(st, "a", ">=", "20")
+    # ... and any other string keeps the file
+    for v in ("1.5", " 12", "abc", str(2**63), "12\n", "1_5", "\uff11\uff15"):
+        assert _satisfiable(st, "a", "=", v) and _satisfiable(st, "a", ">", v), v
+    # string stats are never coerced: "123" < "a" as strings
+    assert not _satisfiable({"cols": {"s": {"mn": "a", "mx": "m", "nulls": 0}}}, "s", "=", "123")
 
 
 def test_nan_data_never_pruned_on_upper_bound(spark, tmp_path):
