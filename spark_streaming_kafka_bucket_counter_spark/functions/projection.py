@@ -1,4 +1,4 @@
-"""Field projection / rename via conversion map, and JSON decode (P1, P2, S5).
+"""Field projection / rename via conversion map, and JSON decode (P2, S5).
 
 Reference semantics: ``json_dict_parse(json_str, conversion_dict)``
 (``audit_utils/utils.py:23-60``) parses a flat JSON object and keeps only
@@ -95,8 +95,3 @@ def decode_json_values(
     if keep_corrupt:
         cols.append(F.col(f"_j.{CORRUPT_COL}").alias(CORRUPT_COL))
     return parsed.select(*cols)
-
-
-def drop_kafka_keys(df: DataFrame) -> DataFrame:
-    """Kafka (key, value) -> value-as-string (P1; reference main.py:124)."""
-    return df.select(F.col("value").cast("string").alias("value"))

@@ -1,4 +1,4 @@
-"""File-based sources: parquet test tables, JSON side files, file streams.
+"""File-based sources: parquet test tables, text side files, document files.
 
 ``load_tables`` registers the driver-generated tables as temp views so the
 serving layer's arbitrary-SQL endpoint (reference H2, ``GET /c/<sql>``)
@@ -12,7 +12,6 @@ root, and everything downstream is unchanged.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -271,12 +270,6 @@ def remove_dir_or_link(path) -> None:
         shutil.rmtree(path, ignore_errors=True)
 
 
-def json_file_to_dict(path: str) -> dict:
-    """Driver-side JSON side-file loader (reference S6, utils.py:265-274)."""
-    with open(path) as fh:
-        return json.load(fh)
-
-
 def open_or_none(path: str | None) -> str | None:
     """File-or-None loader (reference S9, utils.py:375-381)."""
     if not path:
@@ -286,17 +279,6 @@ def open_or_none(path: str | None) -> str | None:
             return fh.read()
     except OSError:
         return None
-
-
-def read_json_stream(spark: SparkSession, path: str, schema) -> DataFrame:
-    """File-based streaming source (newline-JSON), for Kafka-less testing.
-
-    Mirrors the Kafka value stream shape: one string column ``value``.
-    """
-    return (
-        spark.readStream.schema("value string")
-        .text(path)
-    )
 
 
 def zorder_key(cols: list[str], bits: int = 16) -> "F.Column":

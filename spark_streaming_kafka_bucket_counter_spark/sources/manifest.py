@@ -51,11 +51,13 @@ crash debris.
 
 Round 9 also moved the SERVING STORE onto this substrate
 (streaming/serving.py) — appends, compaction, predicate deletes, and
-retention cleans all publish snapshots, so store readers gained the
-same 0-transient contract — and, in the second half, the line-count
-segment tree (streaming/pipeline.py start_line_dedup_ingest): the
-quintet soak caught its legacy directory-listing reader racing
-compaction for real, closing the last non-manifest index tree.
+retention cleans all publish snapshots, and every store read plans
+through :func:`manifest_read`, so store readers share the indexes'
+0-transient contract and pruning rules — and, in the second half, the
+line-count segment tree (streaming/pipeline.py
+start_line_dedup_ingest): the quintet soak caught its legacy
+directory-listing reader racing compaction for real, closing the last
+non-manifest index tree.
 
 Scale notes: a publish costs O(live files) — one JSON dump plus one
 tree scan — and readers pay one JSON parse. That holds comfortably to
@@ -516,24 +518,40 @@ def _satisfiable(fstat: dict | None, col: str, op: str, value) -> bool:
     return True  # op == "in" with an unorderable set already returned
 
 
+def _path_zone(rel: str) -> dict:
+    """Each integer ``col=value`` directory of ``rel`` as a one-value
+    zone for ``col``: the partition value Spark infers from the path."""
+    cols = {}
+    for part in rel.split("/")[:-1]:
+        col, eq, raw = part.partition("=")
+        value = _int_literal(raw) if eq else None
+        if isinstance(value, int):
+            cols[col] = {"mn": value, "mx": value, "nulls": 0}
+    return cols
+
+
 def files_matching(m: dict, sub: str = "",
                    predicate: Sequence[tuple] = ()) -> list[str]:
     """The snapshot's live files under ``sub`` that MAY contain rows
     matching every ``(col, op, value)`` conjunct (ops: = < <= > >= in),
-    judged purely from the snapshot's zone maps — no file is opened.
-    Pruning is correctness-neutral: a kept file may still contain no
-    matching rows (the query's own filter handles that); a skipped file
-    provably contains none. Columns without recorded stats (partition
-    columns, nested/complex types, oversized strings, pre-stats
-    generations) never cause a skip."""
+    judged purely from the snapshot — no file is opened. Data columns
+    are judged by the zone maps recorded at commit; a partition column
+    by the integer ``col=value`` directory in the file's path below
+    ``sub`` (e.g. ``RST_ID=<b>/``), which is a one-value zone. Pruning
+    is correctness-neutral: a kept file may still contain no matching
+    rows (the query's own filter handles that); a skipped file provably
+    contains none. Columns without recorded stats (non-integer
+    partition values, nested/complex types, oversized strings,
+    pre-stats generations) never cause a skip."""
     want = sub.rstrip("/") + "/" if sub else ""
     stats = m.get("stats", {})
     out = []
     for f in m["files"]:
         if not f.startswith(want):
             continue
-        fstat = stats.get(f)
-        if all(_satisfiable(fstat, c, op, v) for (c, op, v) in predicate):
+        fstat = stats.get(f, {})
+        zone = {"cols": {**fstat.get("cols", {}), **_path_zone(f[len(want):])}}
+        if all(_satisfiable(zone, c, op, v) for (c, op, v) in predicate):
             out.append(f)
     return out
 
@@ -785,39 +803,35 @@ def manifest_read(spark: SparkSession, root: str | Path, sub: str = "",
     """Plan a parquet read over the latest snapshot's files under
     ``sub`` (a relative subtree, e.g. ``"postings"``). ``basePath``
     anchors partition-column discovery, so partition pruning and DPP
-    behave exactly as a directory read. Unmanaged trees (no manifest —
-    built by older code or external writers) fall back to the plain
-    directory read. A query spanning several subtrees resolves
-    :func:`latest_manifest` ONCE and passes it as ``snapshot`` so all
-    its reads pin the same generation.
+    behave exactly as a directory read. A query spanning several
+    subtrees resolves :func:`latest_manifest` ONCE and passes it as
+    ``snapshot`` so all its reads pin the same generation.
+
+    The read declares :func:`recorded_schema` over every live file
+    under ``sub``, so Spark runs no footer job and a pruned read still
+    shows a column only pruned files carry (NULL). Without a declared
+    schema — an unmanaged tree (no manifest; built by older code or
+    external writers), a snapshot with a file whose schema was never
+    recorded, or files that disagree on a type — Spark's ``mergeSchema``
+    footer merge decides over every file (or the directory), unpruned:
+    pruning then could drop a column only an unread file carries.
 
     ``predicate`` — ``(col, op, value)`` conjuncts — prunes files by
-    the snapshot's zone maps BEFORE Spark ever lists or opens them
-    (see :func:`files_matching`); at object-store scale that turns a
-    selective point/range read from O(files) footer round-trips into
-    O(manifest). The caller must still apply the real filter: pruning
-    only removes files that provably contain no match. When every live
-    file is pruned the read degrades to the empty-subtree path below
-    (schema preserved)."""
+    the snapshot's zone maps and partition-path zones BEFORE Spark ever
+    lists or opens them (see :func:`files_matching`); at object-store
+    scale that turns a selective point/range read from O(files) footer
+    round-trips into O(manifest). The caller must still apply the real
+    filter: pruning only removes files that provably contain no match.
+    When every live file is pruned the result is empty with the full
+    schema (partition columns included) and scans no file."""
     rootp = Path(root)
     m = snapshot if snapshot is not None else latest_manifest(rootp)
     base = rootp / sub if sub else rootp
     if m is None:
-        return spark.read.parquet(str(base))
+        return spark.read.option("mergeSchema", "true").parquet(str(base))
     want = sub.rstrip("/") + "/" if sub else ""
-    matched = (files_matching(m, sub, predicate) if predicate
-               else [f for f in m["files"] if f.startswith(want)])
-    paths = [str(rootp / f) for f in matched]
-    if not paths and predicate and any(f.startswith(want) for f in m["files"]):
-        # live files exist but all were zone-map-pruned: empty result
-        # with the real schema (from a live file, schema-only)
-        first_live = next(f for f in m["files"] if f.startswith(want))
-        schema = (
-            spark.read.option("basePath", str(base))
-            .parquet(str(rootp / first_live)).schema
-        )
-        return spark.createDataFrame([], schema)
-    if not paths:
+    live = [f for f in m["files"] if f.startswith(want)]
+    if not live:
         # A manifest exists but lists no live files under the subtree.
         # NEVER fall back to the directory read: retired files awaiting
         # GC still sit there, and reading them would resurrect rows a
@@ -839,7 +853,19 @@ def manifest_read(spark: SparkSession, root: str | Path, sub: str = "",
             f"[PATH_NOT_FOUND] manifest snapshot generation "
             f"{m['generation']} has no live files under {base}"
         )
-    return spark.read.option("basePath", str(base)).parquet(*paths)
+    # The explicit file list IS the snapshot pin: files a maintenance
+    # pass retires stay resolvable till GC.
+    reader = spark.read.option("basePath", str(base))
+    schema = recorded_schema(m, live)
+    if schema is None:
+        return reader.option("mergeSchema", "true").parquet(
+            *[str(rootp / f) for f in live]
+        )
+    reader = reader.schema(schema)
+    matched = files_matching(m, sub, predicate) if predicate else live
+    if not matched:
+        return reader.parquet(str(rootp / live[0])).where("false")
+    return reader.parquet(*[str(rootp / f) for f in matched])
 
 
 def _rewrite_dropping_rows(spark: SparkSession, rootp: Path, live: set[str],

@@ -155,27 +155,28 @@ class ServingStore:
     (:meth:`snapshot` + :meth:`view_at`) and row-level
     right-to-be-forgotten (:meth:`forget`) come with the substrate.
 
-    Reads plan from the snapshot alone. Each commit records the row
-    schema Spark wrote into every new file's footer, so a read declares
-    the union of those schemas instead of running Spark's footer-merge
-    (``mergeSchema``) job; batch-id conjuncts (:meth:`batch`,
-    :meth:`recent`, :meth:`view_asof`) and zone-map conjuncts
-    (:meth:`view_where`) cut the file list before Spark sees it, so
-    ``/rv``, ``/dv``, ``/sr`` and ``/c/<json>/EOE`` plan over a handful
-    of files. A full-store read (:meth:`view`, ``/c/<sql>``) still
-    passes every live file, which Spark lists in a parallel job once
-    there are more than 32. A snapshot with a file lacking a recorded
-    schema (written before schemas were recorded) or with files that
-    disagree on a column's type keeps the ``mergeSchema`` read, without
-    batch-id pruning, as before.
+    Every read plans through
+    :func:`~..sources.manifest.manifest_read`, the same rule set the
+    indexes use: it declares the row schemas recorded at commit, and
+    batch-id conjuncts (:meth:`batch`, :meth:`recent`,
+    :meth:`view_asof`, matched against each file's ``RST_ID=<b>/``
+    path) and zone-map conjuncts (:meth:`view_where`) cut the file list
+    before Spark sees it, so ``/rv``, ``/dv``, ``/sr`` and
+    ``/c/<json>/EOE`` plan over a handful of files. A full-store read
+    (:meth:`view`, ``/c/<sql>``) still passes every live file, which
+    Spark lists in a parallel job once there are more than 32. A store
+    with no declared schema (unmanaged, a file whose schema was never
+    recorded, or a type conflict) is read unpruned, and Spark merges
+    the file footers.
 
     Pre-round-9 stores (symlink partitions pointing at hidden
     ``_data_*`` version dirs, or the older two-rename ``_compact_`` /
-    ``_old_`` debris) self-heal and migrate on first metadata read:
+    ``_old_`` debris) self-heal and migrate when the store is opened:
     recovery finishes/rolls back interrupted legacy swaps, symlinks
     materialize into real partition dirs, and the first transaction
     ADOPTS the tree as generation 1 (manifest.py's unmanaged-tree
-    adoption) — no data vanishes on the upgrade path.
+    adoption) — no data vanishes on the upgrade path. Reads never
+    change the directory.
 
     clean_interval / clean_freq semantics follow the reference defaults
     (keep 100 batches, clean every 10; main.py:71-72).
@@ -202,33 +203,31 @@ class ServingStore:
         self.gc_grace_sec = gc_grace_sec
         self.path.mkdir(parents=True, exist_ok=True)
         self._batches_since_clean = 0
-        self._migrated = False
+        self._migrate_legacy_layout()
 
     # -- legacy layout migration (one-time, round 9) ----------------------
     def _migrate_legacy_layout(self) -> None:
-        """Materialize the pre-manifest symlink layout into plain
+        """Repair a legacy layout at open: finish or roll back
+        interrupted two-rename compactions (:meth:`_recover_compactions`),
+        then materialize the pre-manifest symlink layout into plain
         partition dirs so the manifest can manage the files directly:
         resolve each ``RST_ID=<b>`` symlink and move its hidden version
         dir into the slot, then sweep the remaining hidden ``_data_`` /
-        ``_gc_`` version dirs (displaced long ago). One-time upgrade
-        per store — a no-op once a manifest exists or when no symlinks
-        remain. The move is unlink+rename (the same two-syscall window
-        the legacy layout paid once per pre-symlink partition); after
-        it, reader atomicity is the manifest's job, not the
-        filesystem's."""
+        ``_gc_`` version dirs (displaced long ago). A no-op once a
+        manifest exists or when no symlinks remain. Only code older than
+        the manifest layout wrote either shape, so the debris is on disk
+        before any process opens the store. The move is unlink+rename
+        (the same two-syscall window the legacy layout paid once per
+        pre-symlink partition); after it, reader atomicity is the
+        manifest's job, not the filesystem's."""
         from ..sources.manifest import latest_manifest
 
-        # legacy two-rename debris self-heals on EVERY metadata read, as
-        # it always has — a store restored from an old backup can
-        # surface it at any time, and recovery is two cheap globs
         self._recover_compactions()
-        if self._migrated:
-            return
         if latest_manifest(self.path) is None and self._legacy_entries():
-            # the migration MUTATES the tree, so even when reached from
-            # a read path it must hold the maintainer lease: two readers
-            # of a legacy store would otherwise interleave unlink+rename
-            # on the same symlinks (r9 review catch)
+            # the migration MUTATES the tree, so it holds the maintainer
+            # lease: two processes opening a legacy store would otherwise
+            # interleave unlink+rename on the same symlinks (r9 review
+            # catch)
             from ..sources.manifest import (
                 ConcurrentMaintainerError,
                 _maintainer_lease,
@@ -244,7 +243,6 @@ class ServingStore:
                 deadline = time.time() + 30.0
                 while time.time() < deadline and self._legacy_entries():
                     time.sleep(0.2)
-        self._migrated = True
 
     def _legacy_entries(self) -> bool:
         for p in self.path.iterdir():
@@ -278,7 +276,6 @@ class ServingStore:
     def _snapshot(self) -> dict | None:
         from ..sources.manifest import latest_manifest
 
-        self._migrate_legacy_layout()
         return latest_manifest(self.path)
 
     def _remove_partition(self, part: Path) -> None:
@@ -300,7 +297,6 @@ class ServingStore:
         """
         from ..sources.manifest import manifest_txn
 
-        self._migrate_legacy_layout()
         with manifest_txn(self.path, replace_prefixes=[f"{RST_COL}={int(batch_id)}"]):
             (
                 df.withColumn(RST_COL, F.lit(int(batch_id)).cast("long"))
@@ -320,8 +316,8 @@ class ServingStore:
         (``part -> _old_<b>`` then ``_compact_<b> -> part``); a crash
         between them leaves the batch only under ``_old_<b>``, which
         Spark's file listing hides — the batch would silently vanish
-        from ``view()``/``view_asof()``. Called from every metadata read
-        (``_batch_ids``) so any store open self-heals: an orphaned
+        from ``view()``/``view_asof()``. Called at open, so any store
+        self-heals before its first read: an orphaned
         ``_compact_<b>`` with its live partition missing is promoted
         (the compacted data is complete — the swap just didn't finish);
         a leftover ``_old_<b>`` is restored when the live partition is
@@ -391,63 +387,12 @@ class ServingStore:
         travel, complementing the batch-id-based :meth:`view_asof`."""
         return self._view_from(snapshot)
 
-    @classmethod
-    def _batch_zone(cls, f: str) -> dict | None:
-        """A file's batch id as a one-value zone map, so batch-id
-        conjuncts prune by the same rules as data columns."""
-        b = cls._id_of(f)
-        return None if b is None else {"cols": {RST_COL: {"mn": b, "mx": b, "nulls": 0}}}
-
     def _view_from(self, m: dict | None, predicate: list | tuple = ()) -> DataFrame:
-        if m is not None:
-            from ..sources.manifest import (
-                _satisfiable,
-                files_matching,
-                recorded_schema,
-            )
+        from ..sources.manifest import manifest_read
 
-            if not m["files"]:
-                raise ValueError(f"serving store at {self.path} is empty")
-            # declared schema: the union of the row schemas recorded at
-            # commit for EVERY live file, so a pruned read still shows a
-            # column only other batches carry (NULL here) and Spark runs
-            # no footer-merge job; RST_ID stays path-inferred
-            schema = recorded_schema(m, m["files"])
-            rels = m["files"]
-            if predicate:
-                # file pruning: data-column conjuncts against the zone
-                # maps, batch-id conjuncts against each file's RST_ID=<b>/
-                # prefix. The caller ALSO applies every conjunct as a row
-                # filter, so one donor file when everything is pruned
-                # stays correct.
-                rels = files_matching(m, "", [p for p in predicate if p[0] != RST_COL])
-                if schema is not None:
-                    on_batch = [(op, v) for c, op, v in predicate if c == RST_COL]
-                    rels = [f for f in rels if all(
-                        _satisfiable(self._batch_zone(f), RST_COL, op, v)
-                        for op, v in on_batch
-                    )]
-                rels = rels or m["files"][:1]
-            # The explicit per-file list IS the snapshot pin: files a
-            # maintenance pass retires stay resolvable till GC.
-            reader = self.spark.read.option("basePath", str(self.path))
-            paths = [str(self.path / f) for f in rels]
-            if schema is None:
-                # some file has no recorded schema (a snapshot written
-                # before schemas were recorded) or two files disagree on
-                # a type: Spark's footer merge decides, as it always has.
-                # Batch-id pruning stays off here — it would drop a
-                # later-added column from an old batch's read.
-                return reader.option("mergeSchema", "true").parquet(*paths)
-            return reader.schema(schema).parquet(*paths)
-        ids = self._batch_ids()
-        if not ids:
+        if not self._batch_ids(m):
             raise ValueError(f"serving store at {self.path} is empty")
-        return (
-            self.spark.read.option("basePath", str(self.path))
-            .option("mergeSchema", "true")
-            .parquet(*[str(self.path / f"{RST_COL}={i}") for i in ids])
-        )
+        return manifest_read(self.spark, self.path, snapshot=m, predicate=predicate)
 
     def view(self) -> DataFrame:
         """The serving table as a DataFrame; ``RST_ID`` is the partition
@@ -468,16 +413,7 @@ class ServingStore:
         from ..functions.predicates import zone_conjuncts
 
         snap = self._snapshot() if snapshot is None else snapshot
-        pruned = self._view_from(snap, predicate=zone_conjuncts(params))
-        # schema evolution guard for the mergeSchema path: if pruning
-        # dropped every file carrying a later-added column the spec
-        # references, the survivors can't surface it and the caller's
-        # row filter would raise UNRESOLVED_COLUMN where the full view
-        # returns [] — fall back to the unpruned view (correct, merely
-        # unpruned). A declared schema always holds every column.
-        if any(f not in pruned.columns for f in params):
-            return self._view_from(snap)
-        return pruned
+        return self._view_from(snap, predicate=zone_conjuncts(params))
 
     def register(self) -> None:
         """Expose the store as a temp view for arbitrary SQL (Q2/H2)."""
@@ -561,7 +497,6 @@ class ServingStore:
         keep = self.clean_interval if clean_interval is None else clean_interval
         if keep < 0:
             return 0
-        self._migrate_legacy_layout()
         ids = self._batch_ids()
         if not ids:
             return 0
@@ -595,7 +530,6 @@ class ServingStore:
         """
         from ..sources.manifest import gc_index_tree, manifest_txn
 
-        self._migrate_legacy_layout()
         rewritten = 0
         with manifest_txn(self.path) as txn:
             # txn.live_files already covers both managed stores (prior
@@ -643,7 +577,6 @@ class ServingStore:
 
         if not conditions:
             return 0
-        self._migrate_legacy_layout()
         cond = reduce(
             lambda a, b: a & b, [F.col(k) == F.lit(v) for k, v in conditions.items()]
         )
@@ -678,7 +611,6 @@ class ServingStore:
         granular), this is file-granular and id-keyed."""
         from ..sources.manifest import manifest_forget_rows
 
-        self._migrate_legacy_layout()
         m = self._snapshot()
         subtrees = [f"{RST_COL}={i}" for i in self._batch_ids(m)]
         return manifest_forget_rows(

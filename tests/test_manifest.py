@@ -178,6 +178,19 @@ def test_manifest_read_preserves_partition_columns(spark, tmp_path):
     # partition pruning reached the scan: only pb=1 files are read
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "pb=0" not in plan
+    # the pb=<v>/ directory is a one-value zone: a predicate on it plans
+    # only that partition's files, with the same rows
+    pruned = manifest_read(spark, root, "t", predicate=[("pb", "=", 1)])
+    assert pruned.inputFiles()
+    assert all("/pb=1/" in f for f in pruned.inputFiles())
+    assert sorted(map(tuple, pruned.filter("pb = 1").collect())) == sorted(
+        map(tuple, rows)
+    )
+    # no partition matches: empty, full schema, no file planned
+    none = manifest_read(spark, root, "t", predicate=[("pb", "=", 7)])
+    assert none.count() == 0
+    assert set(none.columns) == {"id", "pb"}
+    assert none.inputFiles() == []
 
 
 def test_manifest_publish_is_atomic_tmp_rename(tmp_path):

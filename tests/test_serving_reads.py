@@ -7,6 +7,8 @@ if either optimization silently stops firing."""
 from __future__ import annotations
 
 import json
+import os
+import shutil
 import uuid
 
 import pytest
@@ -79,9 +81,11 @@ def test_batch_and_recent_plan_over_their_own_files(wide_store):
         view.filter(F.col(RST_COL) > N_BATCHES - 1 - 5)
     )
     assert _rows(wide_store.view_asof(3)) == _rows(view.filter(F.col(RST_COL) <= 3))
-    # a batch id outside the store: one schema donor, no rows
+    # a batch id outside the store: every file pruned, the full schema
+    # and no rows, with no file planned
     missing = wide_store.batch(10_000)
-    assert len(missing.inputFiles()) == 1 and missing.count() == 0
+    assert len(missing.inputFiles()) == 0 and missing.count() == 0
+    assert missing.columns == view.columns
     # RST_ID stays the path-inferred partition column
     assert view.schema[RST_COL].dataType.simpleString() == "int"
 
@@ -158,3 +162,32 @@ def test_legacy_stats_read_through_merge_schema(spark, tmp_path):
     assert "schema" in m["stats"][new]
     assert recorded_schema(m, m["files"]) is None
     assert _rows(store.batch(6)) == [("click", 999, 1, 6)]
+
+
+def _listing(root) -> list[str]:
+    return sorted(
+        os.path.relpath(os.path.join(d, n), root)
+        for d, dirs, files in os.walk(root)
+        for n in dirs + files
+    )
+
+
+def test_reads_leave_the_directory_alone(spark, tmp_path):
+    """Reads never repair the layout: legacy compaction debris is healed
+    when a store is opened, not by whichever request finds it first."""
+    path = str(tmp_path / "store")
+    store = ServingStore(spark, path, clean_freq=0)
+    _prefill(spark, store, 3)
+    debris = store.path / "_compact_0"
+    shutil.copytree(store.path / f"{RST_COL}=0", debris)
+    before = _listing(path)
+    assert store.view().count() == 9
+    assert store.batch(0).count() == 3
+    assert store.rst() == 2
+    assert http._route(store, "/rv/1")[0] == 200
+    assert _listing(path) == before
+    # the next open heals it: the live partition exists, so the staged
+    # copy is redundant and goes
+    reopened = ServingStore(spark, path, clean_freq=0)
+    assert not debris.exists()
+    assert _rows(reopened.view()) == _rows(store.view())

@@ -253,11 +253,13 @@ def test_store_compact_frozen_partitions(spark, tmp_path):
 
 
 def test_store_compact_crash_recovery(spark, tmp_path):
-    """Every interruption point of compact()'s two-rename swap must
-    self-heal on the next metadata read — a batch can never vanish."""
+    """Every interruption point of the legacy two-rename compaction swap
+    must self-heal when the store is next opened — a batch can never
+    vanish."""
     import shutil
 
-    store = ServingStore(spark, str(tmp_path / "rstore"), clean_freq=0)
+    path = str(tmp_path / "rstore")
+    store = ServingStore(spark, path, clean_freq=0)
     df = spark.range(50).withColumnRenamed("id", "v")
     for b in range(3):
         store.append(df.repartition(3), b)
@@ -266,6 +268,7 @@ def test_store_compact_crash_recovery(spark, tmp_path):
 
     # crash point 1: staged rewrite written, swap not started
     shutil.copytree(part, tmp_path / "rstore" / "_compact_0")
+    store = ServingStore(spark, path, clean_freq=0)
     assert store._batch_ids() == [0, 1, 2]
     assert not (tmp_path / "rstore" / "_compact_0").exists()
     assert store.view().groupBy().sum("v").collect()[0][0] == total
@@ -273,18 +276,21 @@ def test_store_compact_crash_recovery(spark, tmp_path):
     # crash point 2: between the renames (batch only under _old_0)
     shutil.copytree(part, tmp_path / "rstore" / "_compact_0")
     part.rename(tmp_path / "rstore" / "_old_0")
+    store = ServingStore(spark, path, clean_freq=0)
     assert store._batch_ids() == [0, 1, 2]  # promoted, not lost
     assert part.exists() and not (tmp_path / "rstore" / "_old_0").exists()
     assert store.view().groupBy().sum("v").collect()[0][0] == total
 
     # crash point 3: swap done, backup dir not yet deleted
     shutil.copytree(part, tmp_path / "rstore" / "_old_0")
+    store = ServingStore(spark, path, clean_freq=0)
     assert store._batch_ids() == [0, 1, 2]
     assert not (tmp_path / "rstore" / "_old_0").exists()
     assert store.view().groupBy().sum("v").collect()[0][0] == total
 
     # crash point 2 with the staged copy lost: original restored
     part.rename(tmp_path / "rstore" / "_old_0")
+    store = ServingStore(spark, path, clean_freq=0)
     assert store._batch_ids() == [0, 1, 2]
     assert store.view().groupBy().sum("v").collect()[0][0] == total
 

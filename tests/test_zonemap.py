@@ -178,10 +178,11 @@ def test_serving_store_view_where_prunes_files(spark, tmp_path):
     # inverted-direction comparator: gte(v) keeps col <= v -> low files
     pruned_low = store.view_where({"bucket_start": ("gte", 50)})
     assert len(pruned_low.inputFiles()) == 1
-    # everything pruned: one schema-donor file survives; the row filter
-    # the route applies on top still nulls it out
+    # everything pruned: no file planned, the full schema, no rows
     donor = store.view_where({"bucket_start": ("eq", 10_000)})
-    assert len(donor.inputFiles()) == 1
+    assert len(donor.inputFiles()) == 0
+    assert donor.columns == store.view().columns
+    assert donor.count() == 0
     # custom: specs contribute no conjunct -> full view
     assert len(store.view_where({"x": ("custom:count > 1", None)}).inputFiles()) == 4
 
